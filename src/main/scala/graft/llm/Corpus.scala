@@ -439,8 +439,8 @@ object Corpus {
     // materialization Spark recomputes the whole tokenize+groupBy
     // subtree for each consumer — ReuseExchange cannot dedupe the two
     // occurrences because column pruning rewrites the df branch's
-    // exchange to (term) only (round-20 profile, tools/ProfileInherent:
-    // the join stage's marginal cost equaled tf's own full cost).
+    // exchange to (term) only (round-20 profile: the join stage's
+    // marginal cost equaled tf's own full cost).
     // localCheckpoint is the within-query materialization discipline
     // the near-dup tier already uses; one tokenize pass instead of two
     // at any scale.

@@ -316,8 +316,8 @@ object Dedup {
     NativeExprs.ensureRegistered(t.spark)
     // 16 chunks x 4 bits: any pair at Hamming distance <= 15 shares a
     // chunk (pigeonhole). Token-SimHash over short word-soup docs is
-    // noisy — measured true-pair distances reach hd=12 here (see
-    // tools/Explore.scala) — so the guarantee must cover hd <= 15. On a
+    // noisy — measured true-pair distances reach hd=12 here — so the
+    // guarantee must cover hd <= 15. On a
     // large real corpus (longer docs -> tighter signatures) use wider
     // chunks with a lower distance bound for far smaller buckets.
     //
@@ -390,7 +390,7 @@ object Dedup {
     * fixed-k codebook, fixed hyperplane seed), and on this corpus the
     * union reproduces the
     * exact all-pairs ground truth — each family ALONE reaches recall
-    * 1.0 at the verification scale, measured via tools/ExploreEmb — so
+    * 1.0 at the verification scale (measured) — so
     * the all-pairs DuckDB oracle stays hash-checkable while living only
     * on the oracle side. Dense mid-threshold similarity has no
     * subquadratic exact algorithm (the prefix-filter family needs

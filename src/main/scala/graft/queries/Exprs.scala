@@ -146,8 +146,8 @@ object Exprs {
   def aggPercentiles(t: Tables): DataFrame =
     // p50/p90 of l_quantity come from ONE array-percentile aggregate:
     // two scalar percentile() calls each buffer the full column per
-    // group (the entry's dominant cost — round-20 profile,
-    // tools/ProfileInherent: exact-percentile marginal ~0.97 s vs a
+    // group (the entry's dominant cost — round-20 profile:
+    // exact-percentile marginal ~0.97 s vs a
     // 0.13 s scan), while the array form sorts one buffer and reads
     // both quantiles from it. Same linear interpolation on the same
     // sorted values — bit-identical results, oracle-pinned.

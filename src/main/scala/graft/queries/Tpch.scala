@@ -151,7 +151,7 @@ object Tpch {
     * (date window shifted into the synthetic data's 1995-2001 range).
     *
     * Round-14 eager-aggregation shape (measured: sf10 8.5 → 2.3 s,
-    * rounded rows identical — tools/Q5Probe): the c_custkey join only
+    * rounded rows identical): the c_custkey join only
     * exists to enforce c_nationkey = s_nationkey, so revenue is
     * partial-summed per (o_custkey, supplier nation) BEFORE customer
     * enters — the fact-stream exchange carries bounded per-customer
@@ -479,7 +479,7 @@ object Tpch {
       .filter(col("p_brand") =!= "Brand#1" && !col("p_type").like("MEDIUM%")
         && col("p_size").isin(1, 4, 7, 10, 15, 23, 45, 49))
       .select(col("p_partkey"), col("p_brand"), col("p_type"), col("p_size"))
-    // Round 15 (tools/Q16Probe, SCALING_TPCH.md): the explicit
+    // Round 15 (SCALING_TPCH.md): the explicit
     // pair-distinct stage was semantically redundant (count DISTINCT is
     // idempotent to duplicate rows) and its wide exchange carried ~50 B
     // of group-key strings per row. The distinct (brand, type, size)

@@ -129,7 +129,7 @@ object Tpch2 {
     * after order date) — EXISTS + NOT EXISTS double correlation. */
   def q21(t: Tables): DataFrame = {
     // One pass over lineitem⋈orders (round 13), min/max aggregate form
-    // (round 15, tools/Q21Probe): both correlations are per-order
+    // (round 15): both correlations are per-order
     // supplier-set questions that collapse to constant-width
     // aggregates — EXISTS another supplier on o ⇔ min(suppkey) ≠
     // max(suppkey); NOT EXISTS another LATE supplier ⇔ min and max of

@@ -52,86 +52,41 @@ object AnnScale {
     val spark = Sessions.builder(master = "local[32]", appName = "graft-ann-scale")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // calibration probe (round 19, uniform with the bench lanes):
-    // start/end samples; a >1.5x worst ratio marks over-committed legs
-    // environment-suspect in the printed summary
-    val calibs = Seq.newBuilder[Double]
-    calibs += LaneDiscipline.calibrationRatio(spark, "ann-scale")
     val scales = Seq(1L, 10L, 100L)
-    val rows = scales.map { n =>
-      val d = new java.io.File(s"/root/repo/target/ann_scale/x$n")
+    val tables = scales.map { n =>
+      val d = new java.io.File(s"target/ann_scale/x$n")
       genEmbeddings(spark, n, d)
-      val t = Tables(spark, d.getPath)
-      // The production ANN workload scales QUERIES with the corpus
-      // (index-everything: every new vector queries the index), and
-      // production IVF sizes the codebook with the corpus (~sqrt N
-      // lists, FAISS guidance), probing a fixed fraction of them. The
-      // 1x row keeps the registered entries' exact sizing (16 lists,
-      // probe 6, 20 queries).
-      val vecs = BaseVecs * n
-      val nq = 20L * n
-      val nLists = math.max(16, math.min(128, math.sqrt(vecs.toDouble).toInt))
-      // Probe count stays FIXED as lists grow (the FAISS pattern: nprobe
-      // grows much slower than nlist), so the probed fraction — and with
-      // it the candidate volume per query — SHRINKS with corpus size:
-      // 6·3/44 = 41% at 1x, 6·3/128 = 14% at 10x/100x.
-      val nProbe = 6
-      val reps = if (n == 100L) 1 else 2
-      // min time paired with ITS OWN rep's result set, so the recall
-      // printed for the kept time is computed from the kept run's answer
-      def time(fn: Tables => DataFrame, label: String, nReps: Int,
-               tag: String = ""): (Double, Set[(Long, Long)]) = {
-        var best = Double.MaxValue
-        var bestOut: Set[(Long, Long)] = Set.empty
-        (1 to nReps).foreach { _ =>
-          val jiff0 = LaneDiscipline.cpuJiffies
-          val t0 = System.nanoTime()
-          val out = topk(fn(t))
-          val s = (System.nanoTime() - t0) / 1e9
-          val load = LaneDiscipline.loadavg
-          val steal = LaneDiscipline.stealPct(jiff0, LaneDiscipline.cpuJiffies)
-          System.err.println(f"[ann-scale] x$n%-4d $label%-6s $s%7.2f s " +
-            f"(q=$nq lists=$nLists probe=$nProbe, load $load%.1f, steal $steal%.1f%%)$tag")
-          if (s < best) { best = s; bestOut = out }
-        }
-        (best, bestOut)
-      }
-      // Committed-reference heal (round 17, uniform lane discipline): a
-      // leg over 2x bench/ann_scale.json re-runs ONCE (min-of-measured)
-      // so a transient can't ship as a regression. Recall stays judged
-      // on the kept (fastest) rep's result set.
-      val (commScales, comm) = LaneDiscipline.committed("bench/ann_scale.json", "ann-scale")
-      def timedHealed(fn: Tables => DataFrame, label: String,
-                      commName: String): (Double, Set[(Long, Long)]) = {
-        var (sec, out) = time(fn, label, reps)
-        val ci = commScales.indexOf(n)
-        val over = ci >= 0 && comm.get(commName).flatMap(_.lift(ci))
-          .exists(c => c >= 0.5 && sec > 2.0 * c)
-        if (over) {
-          val (s2, o2) = time(fn, label, 1, " (heal)")
-          if (s2 < sec) { sec = s2; out = o2 }
-        }
-        (sec, out)
-      }
-      val (bSec, exact) = timedHealed(Ann.annBruteforce(_, nq), "brute", "ann_brute")
-      val (iSec, approx) = timedHealed(Ann.annIvf(_, nProbe, nq, nLists), "ivf", "ann_ivf")
-      val recall = (exact & approx).size.toDouble / exact.size
-      (n, vecs, nq, nLists, nProbe, bSec, iSec, recall)
-    }
-    calibs += LaneDiscipline.calibrationRatio(spark, "ann-scale")
-    val calibration = calibs.result()
-    val calibMax = calibration.filterNot(_.isNaN)
-      .foldLeft(Double.NaN)((a, b) => if (a.isNaN || b > a) b else a)
+      n -> Tables(spark, d.getPath)
+    }.toMap
+    // The production ANN workload scales QUERIES with the corpus
+    // (index-everything: every new vector queries the index), and
+    // production IVF sizes the codebook with the corpus (~sqrt N lists,
+    // FAISS guidance), probing a fixed fraction of them. The 1x row keeps
+    // the registered entries' exact sizing (16 lists, probe 6, 20 queries).
+    def queries(n: Long) = 20L * n
+    def lists(n: Long) = math.max(16, math.min(128, math.sqrt((BaseVecs * n).toDouble).toInt))
+    // Probe count stays FIXED as lists grow (the FAISS pattern: nprobe
+    // grows much slower than nlist), so the probed fraction — and with
+    // it the candidate volume per query — SHRINKS with corpus size:
+    // 6·3/44 = 41% at 1x, 6·3/128 = 14% at 10x/100x.
+    val nProbe = 6
+    // Each leg's answer is its top-5 set; recall is scored on the KEPT
+    // rep's answers, so the recall printed for a time is that run's.
+    def leg(name: String, fn: (Tables, Long) => DataFrame) =
+      LaneDiscipline.Leg[Set[(Long, Long)]](name, n => topk(fn(tables(n), n)), (_, _) => Nil)
+    val r = LaneDiscipline.run(spark, LaneDiscipline.Lane("ann", "bench/ann_scale.json", scales,
+      Map(100L -> 1).withDefaultValue(2), Double.MaxValue, Seq(
+        leg("ann_brute", (t, n) => Ann.annBruteforce(t, queries(n))),
+        leg("ann_ivf", (t, n) => Ann.annIvf(t, nProbe, queries(n), lists(n))))))
     println("| scale | vectors | queries | lists/probe | brute top-5 (s) | IVF top-5 (s) | IVF recall@5 vs brute |")
     println("|---|---|---|---|---|---|---|")
-    rows.foreach { case (n, v, nq, nl, np, b, i, r) =>
-      println(f"| ${n}x | $v | $nq | $nl/$np | $b%.2f | $i%.2f | $r%.3f |")
+    for ((n, i) <- scales.zipWithIndex) {
+      val Seq(b, v) = r.entries.map(_.times(i))
+      val exact = r.answers.getOrElse(s"ann_brute@${n}x", Set.empty)
+      val recall = (exact & r.answers.getOrElse(s"ann_ivf@${n}x", Set.empty)).size.toDouble / exact.size
+      println(f"| ${n}x | ${BaseVecs * n} | ${queries(n)} | ${lists(n)}/$nProbe | $b%.2f | $v%.2f | $recall%.3f |")
     }
-    println(s"[ann-scale] calibration ratios: " +
-      calibration.map(c => if (c.isNaN) "n/a" else f"$c%.2f").mkString("/") +
-      (if (!calibMax.isNaN && calibMax > LaneDiscipline.CalibrationSuspectGate)
-        " - ENV-SUSPECT: over-committed legs in this run may be box degradation, not regression"
-       else ""))
+    LaneDiscipline.printReport(r)
     spark.stop()
   }
 }

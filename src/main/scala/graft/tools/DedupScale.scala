@@ -259,283 +259,37 @@ object DedupScale {
         ("span-cut shrunken docs", r.getLong(1), 20 * b))
     }))
 
-  final case class LaneEntry(name: String, times: Seq[Double])
-  final case class LaneResult(entries: Seq[LaneEntry], superlinear: Seq[String],
-                              validationFailures: Seq[String], scales: Seq[Long],
-                              loads: Seq[LaneEntry] = Nil, healed: Seq[String] = Nil,
-                              steals: Seq[LaneEntry] = Nil,
-                              skipped: Map[String, String] = Map.empty,
-                              contended: Map[String, String] = Map.empty,
-                              calibration: Seq[Double] = Nil,
-                              envSuspect: Map[String, String] = Map.empty)
-
-  /** Committed lane reference (bench/dedup_scale.json — the
-    * machine-readable twin of SCALING_DEDUP.md's results table, the
-    * exact analogue of bench/tpch_sweep.json for the TPC-H spots).
-    * BENCH_r16 shipped a superlinear flag for a leg the box weather
-    * almost certainly caused, and it was unfalsifiable from the
-    * artifact because the lane healed against nothing committed and
-    * journaled no loads — this file is what the heal now compares to. */
-  private def committedLane(): (Seq[Long], Map[String, Seq[Double]]) =
-    LaneDiscipline.committed("bench/dedup_scale.json", "dedup-scale")
+  /** Shuffle partitions sized to the corpus: 32 is right for 5k docs,
+    * but at 500k docs the 135M-row anchor aggregation would hand each of
+    * 32 concurrent tasks a multi-hundred-MB hash map at once — the lane
+    * OOM'd before this derivation. AQE coalesces the stages that end up
+    * small, so oversizing costs nothing. */
+  private def partitions(n: Long) = math.min(256L, 32L * math.max(1L, n / 4)).toString
 
   /** Runs the lane; shared by the standalone main and the Bench artifact
     * emitter. `budgetSecs` bounds total lane wall (>1× legs are skipped
-    * once exceeded, like the TPC-H lane — skipped legs record NaN). */
+    * once exceeded — skipped legs record NaN); `only` is a probe-name
+    * regex. The heal reference is bench/dedup_scale.json, the machine-
+    * readable twin of SCALING_DEDUP.md's results table. */
   def run(spark: SparkSession, budgetSecs: Double,
           scales: Seq[Long] = Seq(1L, 10L, 100L),
           reps: Map[Long, Int] = Map(1L -> 2, 10L -> 2).withDefaultValue(1),
-          only: Option[String] = None): LaneResult = {
-    val lane0 = System.nanoTime()
-    def spent = (System.nanoTime() - lane0) / 1e9
-    // calibration probe (round 19): sampled at lane start / pre-heal /
-    // lane end; the WORST ratio adjudicates quiet-steal over-2× legs
-    val calibs = Seq.newBuilder[Double]
-    calibs += LaneDiscipline.calibrationRatio(spark, "dedup-scale")
-    val dirs = scales.map { n =>
+          only: Option[String] = None): LaneDiscipline.LaneResult[Seq[String]] = {
+    val tables = scales.map { n =>
       val d = new java.io.File(s"target/dedup_scale/x$n")
       genDocs(spark, n, d)
       genVecs(spark, n, d)
-      n -> d.getPath
-    }
-    // Probe filter for local iteration (the TPCH lane's _ONLY analogue):
-    // SPARK_GRAFT_DEDUP_ONLY='span' runs just the matching probes; the
-    // `only` parameter is the same filter for in-process callers (the
-    // ScaleLaneSpec ledger test runs ONE probe — r18 advice: the comment
-    // claimed a bound the code didn't implement).
-    val onlyRe = only.orElse(sys.env.get("SPARK_GRAFT_DEDUP_ONLY")).map(_.r)
-    val probes = DedupScale.probes.filter(p =>
-      onlyRe.forall(_.findFirstIn(p.name).isDefined))
-    val allFails = Seq.newBuilder[String]
+      n -> Tables(spark, d.getPath)
+    }.toMap
+    val legs = probes.filter(p => only.forall(_.r.findFirstIn(p.name).isDefined)).map(p =>
+      LaneDiscipline.probe(p.name) { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", partitions(n))
+        p.probe(tables(n), n)
+      })
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-    // Lane-local load floor (round 18): the calmest 1-min load any rep
-    // of THIS lane run observed — the lane's own ~32-thread imprint is
-    // in every observation, so load > floor + 16 means half the box is
-    // doing foreign work on top (the Bench spot trigger, ported). Gives
-    // the contended verdict a second signal for bursts whose steal%
-    // sits just under the gate (observed: a jaccard_prefix 100x leg at
-    // 2.9x committed, load 28, steal 1.2 - visible co-tenant load, not
-    // hypervisor steal).
-    var laneLoadFloor = Double.NaN
-    def noteLoad(l: Double): Unit =
-      if (!l.isNaN && (laneLoadFloor.isNaN || l < laneLoadFloor)) laneLoadFloor = l
-    // returns (seconds, 1-min loadavg at leg end) — the load is the
-    // TPC-H spot journal discipline ported here (round-17 verdict ask
-    // #1): a slow leg with a high journaled load is contention, a slow
-    // leg at quiet load is a regression, and the artifact can now tell
-    // them apart
-    def runLeg(p: Probe, n: Long, dir: String, tag: String): (Double, Double, Double) = {
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(256L, 32L * math.max(1L, n / 4)).toString)
-      val t = Tables(spark, dir)
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val jiff0 = LaneDiscipline.cpuJiffies
-      val t0 = System.nanoTime()
-      allFails ++= p.probe(t, n)
-      val dt = (System.nanoTime() - t0) / 1e9
-      val load = osBean.getSystemLoadAverage
-      // steal% = hypervisor-stolen cycles during THIS leg — the signal
-      // that separates a noisy VM neighbor from a real regression when
-      // the loadavg (largely the lane's own 32-thread imprint) cannot
-      (spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore)
-        .foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
-      val steal = LaneDiscipline.stealPct(jiff0, LaneDiscipline.cpuJiffies)
-      noteLoad(load)
-      System.err.println(
-        f"[dedup-scale] x$n%-4d ${p.name}%-24s $dt%7.2f s ($tag, load $load%.1f, steal $steal%.1f%%)")
-      (dt, load, steal)
-    }
-    try {
-    // Shuffle partitions sized to the corpus (inside runLeg — the
-    // brief's "partitions must fit executor memory at the target SF"
-    // discipline): 32 is right for 5k docs, but at 500k docs the
-    // 135M-row anchor aggregation would hand every one of 32
-    // concurrent tasks a multi-hundred-MB hash map simultaneously —
-    // the lane OOM'd before this derivation. AQE coalesces the stages
-    // that end up small, so oversizing costs nothing. Every probe
-    // fully consumes its result (one collected aggregate row), so
-    // whatever it persisted — CC loop checkpoints, span anchor
-    // blocks, minhash signatures — is dead weight afterwards; runLeg
-    // releases it eagerly rather than waiting on the GC-driven
-    // ContextCleaner (at 100× the residue of earlier probes OOM'd
-    // later ones).
-    // per-(probe, scale) 1-min loadavg journal at the KEPT (fastest)
-    // rep — heals below keep it consistent with whichever rep ships
-    val loadAt = scala.collection.mutable.LinkedHashMap(
-      probes.map(p => p.name -> Array.fill(scales.length)(Double.NaN)): _*)
-    val stealAt = scala.collection.mutable.LinkedHashMap(
-      probes.map(p => p.name -> Array.fill(scales.length)(Double.NaN)): _*)
-    // Explicit skip ledger (round 18, verdict ask #3): a configured leg
-    // that never ran records WHY instead of shipping a bare null.
-    val skipped = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def legBest(p: Probe, i: Int, graceSecs: Double = 0.0, extraReps: Int = 0): Double = {
-      val (n, dir) = dirs(i)
-      var best = Double.NaN
-      for (r <- 1 to reps(n) + extraReps if !(spent > budgetSecs + graceSecs && n > 1)) {
-        val (dt, ld, st) = runLeg(p, n, dir, s"rep $r")
-        if (best.isNaN || dt < best) {
-          best = dt; loadAt(p.name)(i) = ld; stealAt(p.name)(i) = st
-        }
-      }
-      if (best.isNaN) skipped(s"${p.name}@${n}x") = "budget"
-      best
-    }
-    // Two-phase schedule (round-15 ask): BENCH_r14's budget ran out
-    // before text_dup_span_cut's ~105 s 100× leg — the lane's STEEPEST
-    // entry was exactly the one that recorded null. Phase 1 runs every
-    // probe's sub-max legs (cheap; they seed the ordering); phase 2
-    // runs the max-scale legs most-expensive-first, using each probe's
-    // measured second-largest-scale time as the cost proxy, so when a
-    // budget does run out it starves the cheapest legs, not the one
-    // the lane exists to re-evidence.
-    val times = scala.collection.mutable.LinkedHashMap(
-      probes.map(p => p.name -> Array.fill(scales.length)(Double.NaN)): _*)
-    val maxIdx = scales.length - 1
-    for (p <- probes; i <- 0 until maxIdx) times(p.name)(i) = legBest(p, i)
-    // Previously starved legs first (round 19, verdict ask #5): a leg
-    // skipped/contended in the LAST run jumps the max-scale queue, so
-    // the same leg cannot land in the ledger twice in a row merely
-    // because the schedule always reaches it after the budget dies.
-    val pending = LaneDiscipline.pendingLegs("dedup")
-    val steepestFirst = probes.sortBy { p =>
-      val t = if (maxIdx == 0) 0.0 else times(p.name)(maxIdx - 1)
-      (if (pending.contains(s"${p.name}@${scales(maxIdx)}x")) 0 else 1,
-       if (t.isNaN) 0.0 else -t) // unmeasured sorts last within its tier
-    }
-    // Grace pool (round 17): on a contended box ONE expensive leg can
-    // blow the whole budget (observed: simhash@100× at 168 s vs its
-    // committed 62 under loadavg 28 consumed it, and the cheap
-    // trailing legs — including neardup_embedding@100×, exactly the
-    // leg the round-17 re-evidence ask cares about — recorded null).
-    // A cheap remaining leg still runs, bounded: legs whose committed
-    // max-scale value is ≤ 20 s draw from a one-shot overshoot pool of
-    // min(120 s, 25% of budget), so the worst case stays bounded while
-    // a contended expensive leg can no longer starve the cheap tail.
-    val (commScales0, committed0) = committedLane()
-    var gracePool = math.min(120.0, budgetSecs * 0.25)
-    val commMaxIdx = commScales0.indexOf(scales(maxIdx))
-    for (p <- steepestFirst) {
-      val commCost = if (commMaxIdx < 0) Double.NaN
-        else committed0.get(p.name).flatMap(_.lift(commMaxIdx)).getOrElse(Double.NaN)
-      // A cheap leg is admitted while the pool covers its committed
-      // cost; the pool is then charged the leg's ACTUAL wall (round-18
-      // advice fix: charging commCost while granting 2× commCost of
-      // headroom let real overshoot reach ~2× the documented bound).
-      // The pool going negative stops further admissions, so overshoot
-      // is bounded by pool + one contended leg's overrun — the overrun
-      // itself is unavoidable (a running Spark job can't be preempted).
-      val admit = spent > budgetSecs && !commCost.isNaN && commCost <= 20.0 &&
-        gracePool >= commCost
-      val spentBefore = spent
-      val grace = if (admit) spentBefore - budgetSecs + commCost * 2 else 0.0
-      // Cheap max-scale legs run min-of-2 (round 18): the flag-prone
-      // entries are exactly the CHEAP shuffle-heavy ones whose
-      // committed decade already flirts with the 12× threshold
-      // (neardup_embedding: committed decade 7.1×, single burst rep at
-      // steal just under the gate shipped a 20.6× flag) — a second rep
-      // costs ~10-15 s quiet and gives the min three samples with the
-      // heal. Expensive legs keep single-rep for budget.
-      val extra = if (!commCost.isNaN && commCost <= 15.0 && spent <= budgetSecs) 1 else 0
-      times(p.name)(maxIdx) = legBest(p, maxIdx, grace, extra)
-      if (admit) gracePool -= (spent - spentBefore)
-    }
-    val rows = probes.map(p => LaneEntry(p.name, times(p.name).toSeq))
-    // Super-linear flag: a decade (10× docs; planted structure and pair
-    // counts scale exactly 10×) through 32 fixed cores should cost well
-    // under 12×; sub-0.5 s legs are noise-floored. (Tightened 15× → 12×
-    // in round 14 after profiling the worst entry: span_cut's steepest
-    // decade is 8.8× and every stage of it is accounted linear —
-    // SCALING_DEDUP.md — so a 12× decade now means something is wrong,
-    // not merely saturated.)
-    def flag(es: Seq[LaneEntry]): Seq[String] =
-      es.flatMap(e => LaneDiscipline.superlinearFlags(e.name, e.times, scales))
-    // Self-heal (round 13, extended round 17): the >1× legs are
-    // single-rep for budget, so a transient — a cold page cache on the
-    // first 100× leg, a GC wall inherited from whatever the shared
-    // bench JVM ran before the lane — can print one slow number and cry
-    // super-linear where the committed reference run is comfortably
-    // sub-linear. A scaling claim should not flip on one sample: re-run
-    // ONLY the offending leg of each flagged entry once (min-of-2, same
-    // as the bench's over_gate heal) and let the flag survive only if
-    // it reproduces. Round 17 adds the TPC-H spots' committed-reference
-    // trigger: a leg over 2× its bench/dedup_scale.json value is
-    // suspect even when the decade ratio stays under the 12× flag
-    // (BENCH_r16's neardup_embedding@100× shipped at 2.9× committed and
-    // 26× decade with no committed heal to catch it). Capped extra
-    // spend; a genuinely slow entry stays flagged — twice as credibly.
-    calibs += LaneDiscipline.calibrationRatio(spark, "dedup-scale")
-    val (commScales, committed) = committedLane()
-    val healCap = spent + math.min(240.0, budgetSecs * 0.5)
-    val healEvents = Seq.newBuilder[String]
-    val contendedM = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val t2m = scala.collection.mutable.LinkedHashMap(
-      rows.map(e => e.name -> e.times.toArray): _*)
-    // Collect every suspect leg up front and heal WORST-RATIO-FIRST
-    // (round 18): the heal cap is a shared wallet, and iterating in
-    // probe-declaration order let early moderate suspects drain it
-    // before a later, worse leg got its re-run (observed: three ~100 s
-    // heals consumed the 240 s cap and dedup_incremental@100× at 2.25×
-    // committed shipped unhealed). Severity = ratio over the committed
-    // reference (decade-only suspects rank by decade-ratio/12).
-    val suspects = (for {
-      e <- rows
-      t2 = t2m(e.name)
-      i <- t2.indices if !t2(i).isNaN
-    } yield {
-      val decadeRatio =
-        if (i > 0 && !t2(i - 1).isNaN && t2(i - 1) >= 0.5) t2(i) / t2(i - 1) else 0.0
-      val commIdx = commScales.indexOf(scales(i))
-      val commRatio = (for {
-        c <- committed.get(e.name).flatMap(_.lift(commIdx)) if commIdx >= 0 && c >= 0.5
-      } yield t2(i) / c).getOrElse(0.0)
-      (e.name, i, math.max(commRatio / 2.0, decadeRatio / 12.0))
-    }).filter(_._3 > 1.0).sortBy(-_._3)
-    for ((name, i, _) <- suspects if spent < healCap) {
-      val t2 = t2m(name)
-      val p = probes.find(_.name == name).get
-      val (n, dir) = dirs(i)
-      healEvents += s"$name@${n}x"
-      // a contended kept rep waits out a bounded backoff first, so a
-      // short co-tenant burst can't land on both reps (round 18)
-      if (LaneDiscipline.contendedRep(stealAt(name)(i), loadAt(name)(i), laneLoadFloor))
-        LaneDiscipline.backoff("dedup-scale")
-      val (dt, ld, st) = runLeg(p, n, dir, "heal")
-      if (dt < t2(i)) {
-        t2(i) = dt; loadAt(name)(i) = ld; stealAt(name)(i) = st
-      }
-    }
-    val healed = rows.map { e =>
-      val t2 = t2m(e.name)
-      // Contended-leg conversion (round 18): a leg still over 2× its
-      // committed reference whose kept rep journaled contention ships
-      // as a named non-number, never as a measurement — and can no
-      // longer fire a super-linear flag (r17's dedup_superlinear was
-      // contention-attributed but shipped flagged in the artifact).
-      for ((i, reason) <- LaneDiscipline.contendedLegs(t2, loadAt(e.name),
-          stealAt(e.name), scales, commScales, committed.get(e.name))) {
-        contendedM(s"${e.name}@${scales(i)}x") = reason
-        t2(i) = Double.NaN
-      }
-      LaneEntry(e.name, t2.toSeq)
-    }
-    val loadRows = probes.map(p => LaneEntry(p.name, loadAt(p.name).toSeq))
-    val stealRows = probes.map(p => LaneEntry(p.name, stealAt(p.name).toSeq))
-    calibs += LaneDiscipline.calibrationRatio(spark, "dedup-scale")
-    val calibration = calibs.result()
-    val calibMax = calibration.filterNot(_.isNaN)
-      .foldLeft(Double.NaN)((a, b) => if (a.isNaN || b > a) b else a)
-    val envSuspect = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for (e <- healed;
-         (i, reason) <- LaneDiscipline.envSuspectLegs(t2m(e.name), stealAt(e.name),
-           scales, commScales, committed.get(e.name), calibMax))
-      envSuspect(s"${e.name}@${scales(i)}x") = reason
-    LaneDiscipline.writePendingLegs("dedup", skipped.keys ++ contendedM.keys)
-    LaneResult(healed, flag(healed), allFails.result().distinct, scales,
-      loadRows, healEvents.result(), stealRows, skipped.toMap, contendedM.toMap,
-      calibration, envSuspect.toMap)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    try LaneDiscipline.run(spark, LaneDiscipline.Lane("dedup", "bench/dedup_scale.json",
+      scales, reps, budgetSecs, legs))
+    finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
   // ------------------------------------------- decontamination eval axis
@@ -574,8 +328,7 @@ object DedupScale {
     val legs = Seq.newBuilder[EvalAxisLeg]
     val failsB = Seq.newBuilder[String]
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      math.min(256L, 32L * math.max(1L, scale / 4)).toString)
+    spark.conf.set("spark.sql.shuffle.partitions", partitions(scale))
     try {
       val t = Tables(spark, d.getPath)
       val block = expr("doc_id DIV 100")
@@ -599,7 +352,6 @@ object DedupScale {
       // committed broadcast-to-bloom threshold claim (~2M grams), so a
       // contended single rep must not be the shipped evidence — the
       // same discipline as the TPC-H spots and the dedup lane.
-      val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
       for ((tag, isEval, nEval, expect) <- suites; path <- Seq("broadcast", "bloom")) {
         var best = Double.NaN
         var bestLoad = Double.NaN
@@ -611,7 +363,7 @@ object DedupScale {
               forcePath = Some(path))
             .agg(count(lit(1)), count(when(col("n_contaminated") === 28, 1))).head()
           val dt = (System.nanoTime() - tA) / 1e9
-          val ld = osBean.getSystemLoadAverage
+          val ld = LaneDiscipline.loadavg
           if (r.getLong(0) != expect) failsB +=
             s"decon $tag/$path: got ${r.getLong(0)} contaminated want $expect"
           if (r.getLong(1) != expect) failsB +=
@@ -646,8 +398,7 @@ object DedupScale {
         val nB = bloom.count()
         val diff = bloom.exceptAll(bcast).count() + bcast.exceptAll(bloom).count()
         val dt = (System.nanoTime() - tA) / 1e9
-        val ld = java.lang.management.ManagementFactory
-          .getOperatingSystemMXBean.getSystemLoadAverage
+        val ld = LaneDiscipline.loadavg
         if (nB == 0) failsB += "decon e20k_fulltext: zero contaminated docs (vacuous)"
         if (diff != 0) failsB += s"decon e20k_fulltext: paths diverge on $diff rows"
         legs += EvalAxisLeg("e20k_fulltext", 20000L, "both+equiv", dt, ld)
@@ -670,31 +421,9 @@ object DedupScale {
       spark.stop(); return
     }
     val scales = if (args.contains("--small")) Seq(1L, 10L) else Seq(1L, 10L, 100L)
-    val r = run(spark, budgetSecs = 1e9, scales = scales)
-    println("| entry | " + scales.map(n => s"${n}x (${BaseDocs * n / 1000}k docs)")
-      .mkString(" | ") + " | " + scales.sliding(2).map(p => s"${p(0)}->${p(1)} ratio")
-      .mkString(" | ") + " |")
-    println("|---" * (scales.size * 2) + "|")
-    r.entries.foreach { e =>
-      val ratios = e.times.sliding(2).map {
-        case Seq(a, b) => f"${b / a}%.1fx"
-        case _ => "-"
-      }.mkString(" | ")
-      println(s"| ${e.name} | " + e.times.map(t => f"$t%.2f").mkString(" | ") +
-        s" | $ratios |")
-    }
-    println(s"superlinear: ${if (r.superlinear.isEmpty) "NONE" else r.superlinear.mkString(", ")}")
-    println(s"calibration ratios: " +
-      r.calibration.map(c => if (c.isNaN) "n/a" else f"$c%.2f").mkString("/"))
-    if (r.envSuspect.nonEmpty)
-      println(s"ENV-SUSPECT (number kept): ${r.envSuspect.mkString(", ")}")
-    if (r.contended.nonEmpty)
-      println(s"CONTENDED (unmeasured): ${r.contended.mkString(", ")}")
-    if (r.skipped.nonEmpty) println(s"skipped: ${r.skipped.mkString(", ")}")
-    println(s"validation: ${if (r.validationFailures.isEmpty) "ALL PASS"
-      else r.validationFailures.mkString("; ")}")
-    // --no-eval-axis: a targeted probe re-run (SPARK_GRAFT_DEDUP_ONLY)
-    // doesn't need the decontamination eval-suite axis sweep
+    LaneDiscipline.printReport(run(spark, budgetSecs = 1e9, scales = scales))
+    // --no-eval-axis: a lane-only re-run skips the decontamination
+    // eval-suite axis sweep
     if (!args.contains("--small") && !args.contains("--no-eval-axis")) {
       val (legs, fails) = decontaminateEvalAxis(spark, budgetSecs = 1e9)
       println("| eval suite | docs | broadcast s | bloom s |")

@@ -48,19 +48,8 @@ object GeoScale {
     base.union(twins)
   }
 
-  final case class LaneEntry(name: String, times: Seq[Double])
-  final case class LaneResult(entries: Seq[LaneEntry], validationFailures: Seq[String],
-                              superlinear: Seq[String] = Nil, scales: Seq[Long] = Nil,
-                              loads: Seq[LaneEntry] = Nil, healed: Seq[String] = Nil,
-                              steals: Seq[LaneEntry] = Nil,
-                              contended: Map[String, String] = Map.empty,
-                              calibration: Seq[Double] = Nil,
-                              envSuspect: Map[String, String] = Map.empty)
-
   def run(spark: SparkSession, baseN: Long,
-      scales: Seq[Long] = Seq(1L, 10L, 100L)): LaneResult = {
-    val lane0 = System.nanoTime()
-    def spent = (System.nanoTime() - lane0) / 1e9
+      scales: Seq[Long] = Seq(1L, 10L, 100L)): LaneDiscipline.LaneResult[Seq[String]] = {
     // The closed forms assume exactly n/10 twins (spark.range(0, n, 10)
     // has ceil(n/10) elements) and ≥13 grid columns for the contains
     // cut — reject configurations where a CORRECT run would fail
@@ -68,30 +57,6 @@ object GeoScale {
     require(baseN % 10 == 0 && baseN >= 1000,
       s"GeoScale baseN must be a multiple of 10 and >= 1000 (got $baseN): " +
       "the planted-pair and contains closed forms assume it")
-    val fails = Seq.newBuilder[String]
-    // calibration probe (round 19): sampled at lane start / pre-heal /
-    // lane end; the WORST ratio adjudicates quiet-steal over-2× legs
-    val calibs = Seq.newBuilder[Double]
-    calibs += LaneDiscipline.calibrationRatio(spark, "geo-scale")
-    // (seconds, 1-min loadavg at leg end) — the TPC-H/dedup spot journal
-    // discipline, uniform across lanes as of round 17
-    // lane-local load floor (round 18): calmest load any rep saw —
-    // load > floor + 16 marks foreign work the steal gate can miss
-    var laneLoadFloor = Double.NaN
-    def leg(name: String, n: Long, tag: String = "")(probe: Long => Seq[String]): (Double, Double, Double) = {
-      val jiff0 = LaneDiscipline.cpuJiffies
-      val t0 = System.nanoTime()
-      fails ++= probe(n)
-      val dt = (System.nanoTime() - t0) / 1e9
-      val load = LaneDiscipline.loadavg
-      if (!load.isNaN && (laneLoadFloor.isNaN || load < laneLoadFloor))
-        laneLoadFloor = load
-      val steal = LaneDiscipline.stealPct(jiff0, LaneDiscipline.cpuJiffies)
-      val t = if (tag.isEmpty) "" else s" ($tag)"
-      System.err.println(
-        f"[geo-scale] x${n / baseN}%-4d $name%-16s $dt%7.2f s (load $load%.1f, steal $steal%.1f%%)$t")
-      (dt, load, steal)
-    }
     // untimed warmup of BOTH probe pipelines: codegen + join machinery
     // JIT, else the 1× legs carry ~4 s of first-query cost and the
     // decade ratios read <1
@@ -214,78 +179,13 @@ object GeoScale {
         bad += s"union_agg@x$s: slab-area sum ${r.getDouble(0)} want $want"
       bad.result()
     }
-    // Uniform probe table: every leg re-runnable by name, so the heal
-    // below can target exactly the suspect (probe, scale) pair.
-    val probes: Seq[(String, String, Long => Seq[String])] = Seq(
-      ("geo_distance_join", "distance_join", joinProbe _),
-      ("geo_contains_scan", "contains_scan", pipProbe _),
-      ("geo_relate_scan", "relate_scan", relProbe _),
-      ("geo_union_agg", "union_agg", uaProbe _))
-    val times = probes.map { case (name, disp, f) =>
-      name -> scales.map { s =>
-        leg(disp, baseN * s)(f)
-      }.toArray
-    }
-    val loadAt = scala.collection.mutable.LinkedHashMap(
-      times.map { case (n, ts) => n -> ts.map(_._2) }: _*)
-    val stealAt = scala.collection.mutable.LinkedHashMap(
-      times.map { case (n, ts) => n -> ts.map(_._3) }: _*)
-    val secs = scala.collection.mutable.LinkedHashMap(
-      times.map { case (n, ts) => n -> ts.map(_._1) }: _*)
-    // Committed-reference heal + super-linear flag (round 17, uniform
-    // with DedupScale): a leg over 2× bench/geo_scale.json or a >12×
-    // decade re-runs once (min-of-2, load re-journaled at the kept rep);
-    // the flag survives only if it reproduces. Round 18: heal spend is
-    // wall-capped like StreamScale's (a persistently contended box can
-    // trip every probe/scale pair — unbounded heals would roughly
-    // double the lane inside Bench's artifact run), and a contended
-    // kept rep gets a bounded backoff before its retry.
-    calibs += LaneDiscipline.calibrationRatio(spark, "geo-scale")
-    val (commScales, comm) = LaneDiscipline.committed("bench/geo_scale.json", "geo-scale")
-    val healCap = spent + math.max(120.0, spent * 0.5)
-    val healEvents = Seq.newBuilder[String]
-    for ((name, disp, f) <- probes; i <- scales.indices if spent < healCap) {
-      if (LaneDiscipline.suspect(secs(name), i, scales, commScales, comm.get(name), 12.0)) {
-        healEvents += s"$name@${scales(i)}x"
-        if (LaneDiscipline.contendedRep(stealAt(name)(i), loadAt(name)(i), laneLoadFloor))
-          LaneDiscipline.backoff("geo-scale")
-        val (dt, ld, st) = leg(disp, baseN * scales(i), "heal")(f)
-        if (dt < secs(name)(i)) {
-          secs(name)(i) = dt; loadAt(name)(i) = ld; stealAt(name)(i) = st
-        }
-      }
-    }
-    // Contended-leg conversion (round 18): still over 2× committed with
-    // a contention journal at the kept rep → named non-number.
-    val contended = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((name, _, _) <- probes) {
-      for ((i, reason) <- LaneDiscipline.contendedLegs(secs(name), loadAt(name),
-          stealAt(name), scales, commScales, comm.get(name))) {
-        contended(s"$name@${scales(i)}x") = reason
-        secs(name)(i) = Double.NaN
-      }
-    }
-    val entries = probes.map { case (name, _, _) => LaneEntry(name, secs(name).toSeq) }
-    val superlinear = entries.flatMap(e =>
-      LaneDiscipline.superlinearFlags(e.name, e.times, scales))
-    // distinct: a heal rep re-runs the probe's validating aggregate, so
-    // a persistently wrong answer would otherwise report twice (a wrong
-    // answer in ANY rep still fails the lane — nondeterministic
-    // wrongness is a bug, not noise)
-    calibs += LaneDiscipline.calibrationRatio(spark, "geo-scale")
-    val calibration = calibs.result()
-    val calibMax = calibration.filterNot(_.isNaN)
-      .foldLeft(Double.NaN)((a, b) => if (a.isNaN || b > a) b else a)
-    val envSuspect = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((name, _, _) <- probes;
-         (i, reason) <- LaneDiscipline.envSuspectLegs(secs(name), stealAt(name),
-           scales, commScales, comm.get(name), calibMax))
-      envSuspect(s"$name@${scales(i)}x") = reason
-    LaneResult(entries, fails.result().distinct, superlinear, scales,
-      probes.map { case (name, _, _) => LaneEntry(name, loadAt(name).toSeq) },
-      healEvents.result(),
-      probes.map { case (name, _, _) => LaneEntry(name, stealAt(name).toSeq) },
-      contended.toMap, calibration, envSuspect.toMap)
+    // no budget: the geo lane is cheap at every scale it runs
+    LaneDiscipline.run(spark, LaneDiscipline.Lane("geo", "bench/geo_scale.json", scales,
+      Map.empty[Long, Int].withDefaultValue(1), Double.MaxValue, Seq(
+        LaneDiscipline.probe("geo_distance_join")(s => joinProbe(baseN * s)),
+        LaneDiscipline.probe("geo_contains_scan")(s => pipProbe(baseN * s)),
+        LaneDiscipline.probe("geo_relate_scan")(s => relProbe(baseN * s)),
+        LaneDiscipline.probe("geo_union_agg")(s => uaProbe(baseN * s)))))
   }
 
   def main(args: Array[String]): Unit = {
@@ -294,25 +194,8 @@ object GeoScale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark, baseN)
-    r.entries.zip(r.loads).foreach { case (e, l) =>
-      val dec = e.times.sliding(2).map { case Seq(a, b) => f"${b / a}%.1f×" }.mkString(", ")
-      println(f"[geo-scale] ${e.name}%-18s ${e.times.map(t => f"$t%.2f").mkString(" / ")} s " +
-        s"(decades $dec; loads ${l.times.map(t => f"$t%.1f").mkString("/")})")
-    }
-    if (r.healed.nonEmpty) println(s"[geo-scale] healed: ${r.healed.mkString(", ")}")
-    println(s"[geo-scale] calibration ratios: " +
-      r.calibration.map(c => if (c.isNaN) "n/a" else f"$c%.2f").mkString("/"))
-    if (r.envSuspect.nonEmpty)
-      println(s"[geo-scale] ENV-SUSPECT (number kept): ${r.envSuspect.mkString(", ")}")
-    if (r.contended.nonEmpty)
-      println(s"[geo-scale] CONTENDED (unmeasured): ${r.contended.mkString(", ")}")
-    if (r.superlinear.nonEmpty)
-      println(s"[geo-scale] SUPERLINEAR: ${r.superlinear.mkString(", ")}")
-    if (r.validationFailures.nonEmpty) {
-      System.err.println(s"[geo-scale] VALIDATION FAILED: ${r.validationFailures.mkString("; ")}")
-      spark.stop(); sys.exit(1)
-    }
-    println("[geo-scale] validation ALL PASS")
+    LaneDiscipline.printReport(r)
     spark.stop()
+    if (r.validationFailures.nonEmpty) sys.exit(1)
   }
 }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import scala.collection.mutable
+
 /** Shared pieces of the scale-lane spot discipline (round 17): every
   * lane that ships numbers in the official artifact journals a 1-min
   * loadavg per kept leg and heals legs that exceed 2× their committed
@@ -396,4 +398,196 @@ object LaneDiscipline {
         Some(i -> f"env-suspect sec=${times(i)}%.2f quiet-steal but lane calibration ran $calibMax%.2fx committed")
       else None
     }
+
+  /** Worst (largest) non-NaN calibration ratio of a lane run; NaN when
+    * no sample had a committed reference. */
+  def worstRatio(calibration: Seq[Double]): Double =
+    calibration.filterNot(_.isNaN)
+      .foldLeft(Double.NaN)((a, b) => if (a.isNaN || b > a) b else a)
+
+  // ---- The scale-lane runner ----
+  //
+  // Every scale lane (dedup, stream, geo, ANN) is a leg table handed to
+  // [[run]]. The runner alone owns the discipline above: calibration
+  // samples, the lane load floor and the load/steal journal at the kept
+  // rep, the budget skip ledger, the pending-leg schedule, the committed-
+  // reference heal, contended conversion, env-suspect annotation and the
+  // superlinear flags. A lane supplies only its generators and probes.
+
+  /** One leg: `run(scale)` is the timed action; `check` validates its
+    * answer outside the timed window. A leg whose timed action IS its
+    * validating aggregate returns the failures as the answer ([[probe]]). */
+  final case class Leg[A](name: String, run: Long => A, check: (Long, A) => Seq[String])
+
+  /** A leg whose timed action returns its own validation failures. */
+  def probe(name: String)(f: Long => Seq[String]): Leg[Seq[String]] =
+    Leg(name, f, (_, fails) => fails)
+
+  /** The leg table. `tag` names the lane in logs and its pending-leg
+    * ledger; `committedFile` is the lane's committed reference
+    * (bench/<lane>_scale.json); `reps(scale)` reps per leg; legs above
+    * 1× stop once the lane has spent `budgetSecs`. */
+  final case class Lane[A](tag: String, committedFile: String, scales: Seq[Long],
+                           reps: Map[Long, Int], budgetSecs: Double, legs: Seq[Leg[A]])
+
+  final case class LaneEntry(name: String, times: Seq[Double])
+
+  /** One lane run. Legs never measured are NaN in `entries` and named in
+    * `skipped`; contended legs are NaN and named in `contended`.
+    * `answers` holds each leg's kept-rep answer, keyed `name@Nx`. */
+  final case class LaneResult[+A](entries: Seq[LaneEntry], superlinear: Seq[String],
+                                  validationFailures: Seq[String], scales: Seq[Long],
+                                  loads: Seq[LaneEntry], healed: Seq[String],
+                                  steals: Seq[LaneEntry], skipped: Map[String, String],
+                                  contended: Map[String, String], calibration: Seq[Double],
+                                  envSuspect: Map[String, String], answers: Map[String, A])
+
+  /** Runs a lane's leg table. Schedule: every leg's sub-max scales first
+    * (cheap; they seed the ordering), then the max-scale legs — legs the
+    * previous run left unmeasured first (the `target/<tag><max>_pending`
+    * ledger), then most-expensive-first by their second-largest-scale
+    * time, so a budget that runs out starves the cheapest legs. Suspect
+    * legs (over 2× committed, or a >12× decade) are re-run once,
+    * worst ratio first, under one wall cap. */
+  def run[A](spark: org.apache.spark.sql.SparkSession, lane: Lane[A]): LaneResult[A] = {
+    import lane._
+    val log = s"$tag-scale"
+    val lane0 = System.nanoTime()
+    def spent = (System.nanoTime() - lane0) / 1e9
+    // sampled at lane start, before healing and at lane end; the WORST
+    // ratio adjudicates quiet-steal over-2× legs
+    val calibs = Seq.newBuilder[Double]
+    calibs += calibrationRatio(spark, log)
+    val (commScales, comm) = committed(committedFile, log)
+    def grid = mutable.LinkedHashMap(legs.map(_.name -> Array.fill(scales.length)(Double.NaN)): _*)
+    // per-leg time, 1-min loadavg and steal% at the KEPT (fastest) rep
+    val (times, loads, steals) = (grid, grid, grid)
+    val answers = mutable.Map.empty[String, A]
+    val fails = Seq.newBuilder[String]
+    val skipped, contended, envSuspect = mutable.LinkedHashMap.empty[String, String]
+    val healed = mutable.LinkedHashSet.empty[String]
+    // Lane load floor: the calmest 1-min load any rep of this run saw.
+    // The lane's own threads are in every observation, so load > floor
+    // + 16 means half the box is doing foreign work on top.
+    var loadFloor = Double.NaN
+    def key(leg: Leg[A], i: Int) = s"${leg.name}@${scales(i)}x"
+    def rep(leg: Leg[A], i: Int, what: String): Unit = {
+      val n = scales(i)
+      val persisted = spark.sparkContext.getPersistentRDDs.keySet
+      val jiff0 = cpuJiffies
+      val t0 = System.nanoTime()
+      val answer = leg.run(n)
+      val dt = (System.nanoTime() - t0) / 1e9
+      val load = loadavg
+      val steal = stealPct(jiff0, cpuJiffies)
+      fails ++= leg.check(n, answer)
+      // Release what the leg persisted (checkpoints, anchor blocks,
+      // signatures) once it is validated: at 100× the residue of earlier
+      // legs OOMs later ones if left to the GC-driven ContextCleaner.
+      (spark.sparkContext.getPersistentRDDs.keySet -- persisted)
+        .foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
+          .foreach(_.unpersist(blocking = false)))
+      if (!load.isNaN && (loadFloor.isNaN || load < loadFloor)) loadFloor = load
+      System.err.println(
+        f"[$log] x$n%-4d ${leg.name}%-24s $dt%7.2f s ($what, load $load%.1f, steal $steal%.1f%%)")
+      if (times(leg.name)(i).isNaN || dt < times(leg.name)(i)) {
+        times(leg.name)(i) = dt; loads(leg.name)(i) = load; steals(leg.name)(i) = steal
+        answers(key(leg, i)) = answer
+      }
+    }
+    // A configured leg that never ran records WHY instead of a bare null.
+    def measure(leg: Leg[A], i: Int, grace: Double = 0.0, extra: Int = 0): Unit = {
+      for (r <- 1 to reps(scales(i)) + extra if !(scales(i) > 1 && spent > budgetSecs + grace))
+        rep(leg, i, s"rep $r")
+      if (times(leg.name)(i).isNaN) skipped(key(leg, i)) = "budget"
+    }
+    val maxIdx = scales.length - 1
+    for (leg <- legs; i <- 0 until maxIdx) measure(leg, i)
+    val pending = pendingLegs(s"$tag${scales(maxIdx)}")
+    val order = legs.sortBy { leg =>
+      val prev = if (maxIdx == 0) 0.0 else times(leg.name)(maxIdx - 1)
+      (if (pending(key(leg, maxIdx))) 0 else 1, if (prev.isNaN) 0.0 else -prev)
+    }
+    // Grace pool: once the budget is spent, a leg whose committed max-
+    // scale cost is <= 20 s still runs while a one-shot pool of
+    // min(120 s, 25% of budget) covers it; the pool is charged the leg's
+    // actual wall. One contended expensive leg can no longer starve the
+    // cheap tail, and overshoot stays bounded by the pool plus one leg.
+    var gracePool = math.min(120.0, budgetSecs * 0.25)
+    val commMaxIdx = commScales.indexOf(scales(maxIdx))
+    for (leg <- order) {
+      val cost = comm.get(leg.name).flatMap(_.lift(commMaxIdx)).getOrElse(Double.NaN)
+      val admit = spent > budgetSecs && !cost.isNaN && cost <= 20.0 && gracePool >= cost
+      val before = spent
+      val grace = if (admit) before - budgetSecs + cost * 2 else 0.0
+      // cheap max-scale legs run min-of-2: the flag-prone legs are the
+      // cheap shuffle-heavy ones whose committed decade nears 12×
+      val extra = if (!cost.isNaN && cost <= 15.0 && spent <= budgetSecs) 1 else 0
+      measure(leg, maxIdx, grace, extra)
+      if (admit) gracePool -= spent - before
+    }
+    calibs += calibrationRatio(spark, log)
+    // Heal worst-ratio first: the cap is a shared wallet, and severity is
+    // the ratio over the committed reference (decade-only suspects rank
+    // by decade ratio / 12).
+    def severity(name: String, i: Int): Double = {
+      val t = times(name)
+      val decade = if (i > 0 && !t(i - 1).isNaN && t(i - 1) >= 0.5) t(i) / t(i - 1) else 0.0
+      val ci = commScales.indexOf(scales(i))
+      val vsComm = comm.get(name).flatMap(_.lift(ci)).filter(_ >= 0.5).fold(0.0)(t(i) / _)
+      math.max(vsComm / 2.0, decade / 12.0)
+    }
+    val suspects = (for {
+      leg <- legs
+      i <- scales.indices if suspect(times(leg.name), i, scales, commScales, comm.get(leg.name), 12.0)
+    } yield (leg, i)).sortBy { case (leg, i) => -severity(leg.name, i) }
+    // heal wallet: half the budget, floored at 120 s so a lane that has
+    // already overshot can still falsify one transient, capped at 240 s
+    val healCap = spent + math.max(120.0, math.min(240.0, budgetSecs * 0.5))
+    for ((leg, i) <- suspects if spent < healCap) {
+      healed += key(leg, i)
+      // a contended kept rep waits out a bounded backoff first, so a
+      // short co-tenant burst cannot land on both reps
+      if (contendedRep(steals(leg.name)(i), loads(leg.name)(i), loadFloor)) backoff(log)
+      rep(leg, i, "heal")
+    }
+    for (leg <- legs; (i, reason) <- contendedLegs(times(leg.name), loads(leg.name),
+        steals(leg.name), scales, commScales, comm.get(leg.name))) {
+      contended(key(leg, i)) = reason
+      times(leg.name)(i) = Double.NaN
+    }
+    calibs += calibrationRatio(spark, log)
+    val calibration = calibs.result()
+    for (leg <- legs; (i, reason) <- envSuspectLegs(times(leg.name), steals(leg.name),
+        scales, commScales, comm.get(leg.name), worstRatio(calibration)))
+      envSuspect(key(leg, i)) = reason
+    writePendingLegs(s"$tag${scales(maxIdx)}", skipped.keys ++ contended.keys)
+    def rows(g: mutable.LinkedHashMap[String, Array[Double]]) =
+      legs.map(leg => LaneEntry(leg.name, g(leg.name).toSeq))
+    val entries = rows(times)
+    // distinct: a heal rep re-validates, so a persistently wrong answer
+    // would otherwise report twice (a wrong answer in ANY rep still fails)
+    LaneResult(entries, entries.flatMap(e => superlinearFlags(e.name, e.times, scales)),
+      fails.result().distinct, scales, rows(loads), healed.toSeq, rows(steals),
+      skipped.toMap, contended.toMap, calibration, envSuspect.toMap, answers.toMap)
+  }
+
+  /** The standalone mains' shared report: the decade table, then the
+    * heal, calibration and ledger lines and the validation verdict. */
+  def printReport(r: LaneResult[_]): Unit = {
+    println("| entry | " + (r.scales.map(n => s"${n}x") ++
+      r.scales.sliding(2).collect { case Seq(a, b) => s"${a}x->${b}x" }).mkString(" | ") + " |")
+    println("|---" * (2 * r.scales.size) + "|")
+    for (e <- r.entries) println(s"| ${e.name} | " + (e.times.map(t => f"$t%.2f") ++
+      e.times.sliding(2).collect { case Seq(a, b) => f"${b / a}%.1fx" }).mkString(" | ") + " |")
+    for ((what, xs) <- Seq("healed" -> r.healed, "SUPERLINEAR" -> r.superlinear,
+        "ENV-SUSPECT (number kept)" -> r.envSuspect.toSeq.map(_.toString),
+        "CONTENDED (unmeasured)" -> r.contended.toSeq.map(_.toString),
+        "skipped" -> r.skipped.toSeq.map(_.toString)) if xs.nonEmpty)
+      println(s"$what: ${xs.mkString(", ")}")
+    println("calibration ratios: " +
+      r.calibration.map(c => if (c.isNaN) "n/a" else f"$c%.2f").mkString("/"))
+    println(s"validation: ${if (r.validationFailures.isEmpty) "ALL PASS"
+      else r.validationFailures.mkString("; ")}")
+  }
 }

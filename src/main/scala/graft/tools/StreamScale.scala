@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Sessions
 import graft.streaming.Streams
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming scale-evidence harness — the streaming tier's analogue of
@@ -65,62 +65,39 @@ object StreamScale {
     org.apache.commons.io.FileUtils.deleteDirectory(w)
   }
 
-  final case class LaneEntry(name: String, times: Seq[Double])
-  final case class LaneResult(entries: Seq[LaneEntry],
-                              validationFailures: Seq[String], scales: Seq[Long],
-                              superlinear: Seq[String] = Nil,
-                              loads: Seq[LaneEntry] = Nil, healed: Seq[String] = Nil,
-                              steals: Seq[LaneEntry] = Nil,
-                              skipped: Map[String, String] = Map.empty,
-                              contended: Map[String, String] = Map.empty,
-                              calibration: Seq[Double] = Nil,
-                              envSuspect: Map[String, String] = Map.empty)
-
-  /** Runs the lane; shared by the standalone main (1×/10×/100×) and the
-    * per-bench artifact emitter (1×/10×, budget-guarded — round 14,
-    * verdict Next #7: the lane's validation claims are re-evidenced on
-    * every bench run, not only when run by hand). `budgetSecs` bounds
-    * total lane wall: >1× legs are skipped once exceeded and record
-    * NaN, the same policy as the TPC-H and dedup lanes. */
   /** The lane's event-based entries, in rotation order (Bench's 100×
-    * round-robin indexes this). */
+    * round-robin indexes this). stream_dedup streams the documents table
+    * and has its own oracle entry plus DedupScale-side evidence. */
   val laneEntryNames: Seq[String] = Seq("stream_tumbling", "stream_sessions", "stream_join")
 
+  /** Runs the lane; shared by the standalone main (1×/10×/100×) and the
+    * per-bench artifact emitter (1×/10×, budget-guarded, plus the 100×
+    * rotation). `names` narrows the legs — Bench's rotation runs one.
+    * Wall times include each entry's own replay staging. */
   def run(spark: SparkSession, budgetSecs: Double,
           scales: Seq[Long] = Seq(1L, 10L, 100L),
           reps: Map[Long, Int] = Map(1L -> 2, 10L -> 2).withDefaultValue(1),
-          names: Set[String] = laneEntryNames.toSet): LaneResult = {
-    val lane0 = System.nanoTime()
-    def spent = (System.nanoTime() - lane0) / 1e9
-    // calibration probe (round 19): sampled at lane start / pre-heal /
-    // lane end; the WORST ratio adjudicates quiet-steal over-2× legs
-    val calibs = Seq.newBuilder[Double]
-    calibs += LaneDiscipline.calibrationRatio(spark, "stream-scale")
+          names: Set[String] = laneEntryNames.toSet): LaneDiscipline.LaneResult[DataFrame] = {
     val dirs = scales.map { n =>
-      val d = new java.io.File(s"/root/repo/target/stream_scale/x$n")
+      val d = new java.io.File(s"target/stream_scale/x$n")
       genEvents(spark, n, d)
       n -> d.getPath
-    }
-    val fails = Seq.newBuilder[String]
-    // Result validation at every scale (round 13): the drained-replay
-    // answer is checked against a closed form where one exists (event
-    // conservation — every event lands in exactly one window/session)
-    // and against an INDEPENDENT batch plan otherwise (the reference's
-    // differential discipline applied to scale). Checks run on the
-    // memory-sink table the timed rep already materialized, so they add
-    // no replay cost; batch twins run outside the timed window.
-    def check(n: Long, what: String, got: Long, want: Long): Unit =
-      if (got != want) fails += s"x$n $what: got $got want $want"
-    def validate(name: String, n: Long, dir: String,
-                 df: org.apache.spark.sql.DataFrame): Unit = {
-      val ev = graft.Catalog.load(spark, dir, "events")
+    }.toMap
+    // Result validation at every scale, on the memory-sink table the
+    // timed rep already materialized (outside the timed window): event
+    // conservation where a closed form exists (every event lands in
+    // exactly one window/session), an INDEPENDENT batch plan otherwise.
+    def check(n: Long, what: String, got: Long, want: Long): Seq[String] =
+      if (got != want) Seq(s"x$n $what: got $got want $want") else Nil
+    def validate(name: String, n: Long, df: DataFrame): Seq[String] = {
+      val ev = graft.Catalog.load(spark, dirs(n), "events")
       name match {
         case "stream_tumbling" =>
           check(n, "tumbling event conservation",
             df.agg(sum(col("n"))).head().getLong(0), BaseRows * n)
         case "stream_sessions" =>
           check(n, "sessions event conservation",
-            df.agg(sum(col("n_events"))).head().getLong(0), BaseRows * n)
+            df.agg(sum(col("n_events"))).head().getLong(0), BaseRows * n) ++
           check(n, "sessions vs batch gaps-and-islands",
             df.count(), Streams.sessionsBatch(spark, ev).count())
         case "stream_join" =>
@@ -132,126 +109,24 @@ object StreamScale {
             col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
             col("c_ts") <= col("p_ts")).count()
           check(n, "interval join vs batch twin", df.count(), batch)
-        case _ =>
+        case _ => Nil
       }
     }
-    // Lane scope = the EVENTS-based entries (the synthetic corpora here
-    // carry only events.parquet); stream_dedup streams the documents
-    // table and has its own oracle entry + DedupScale-side evidence.
-    // `names` narrows further — Bench's 100× rotation runs one entry.
-    // (seconds, 1-min loadavg at leg end) — the TPC-H/dedup spot journal
-    // discipline, uniform across lanes as of round 17. Validation runs
-    // on every rep (outside the timed window).
-    // lane-local load floor (round 18): calmest load any rep saw —
-    // load > floor + 16 marks foreign work the steal gate can miss
-    var laneLoadFloor = Double.NaN
-    def runLeg(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-               n: Long, dir: String, tag: String): (Double, Double, Double) = {
-      val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val jiff0 = LaneDiscipline.cpuJiffies
-      val t0 = System.nanoTime()
-      val df = fn(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      val d = (System.nanoTime() - t0) / 1e9
-      val load = LaneDiscipline.loadavg
-      val steal = LaneDiscipline.stealPct(jiff0, LaneDiscipline.cpuJiffies)
-      if (!load.isNaN && (laneLoadFloor.isNaN || load < laneLoadFloor))
-        laneLoadFloor = load
-      System.err.println(
-        f"[stream-scale] x$n%-4d $name%-16s $d%7.2f s (load $load%.1f, steal $steal%.1f%%, $tag)")
-      validate(name, n, dir, df)
-      // release this leg's detachSink checkpoint blocks eagerly (the
-      // DedupScale sweep): at 100× a leg's materialized result is ~3M
-      // rows, dead weight once validated. AFTER validate — a truncated-
-      // lineage localCheckpoint cannot recompute once unpersisted.
-      (spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore)
-        .foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-          .foreach(_.unpersist(blocking = false)))
-      (d, load, steal)
+    val legs = Streams.entries.collect { case (name, fn, _)
+        if laneEntryNames.contains(name) && names(name) =>
+      LaneDiscipline.Leg[DataFrame](name, n => {
+        val df = fn(spark, dirs(n))
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }, validate(name, _, _))
     }
-    val picked = Streams.entries
-      .filter(e => laneEntryNames.contains(e._1) && names(e._1))
-    val secs = scala.collection.mutable.LinkedHashMap(
-      picked.map(e => e._1 -> Array.fill(scales.length)(Double.NaN)): _*)
-    val loadAt = scala.collection.mutable.LinkedHashMap(
-      picked.map(e => e._1 -> Array.fill(scales.length)(Double.NaN)): _*)
-    val stealAt = scala.collection.mutable.LinkedHashMap(
-      picked.map(e => e._1 -> Array.fill(scales.length)(Double.NaN)): _*)
-    // Explicit skip ledger (round 18, verdict ask #3): a configured leg
-    // that never ran must say WHY — "budget" here — so a reader can
-    // tell "not measured" from "doesn't exist".
-    val skipped = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((name, fn, _) <- picked; i <- scales.indices) {
-      val (n, dir) = dirs(i)
-      if (!(n > 1L && spent > budgetSecs)) {
-        for (r <- 1 to reps(n)) {
-          val (d, ld, st) = runLeg(name, fn, n, dir, s"rep $r")
-          if (secs(name)(i).isNaN || d < secs(name)(i)) {
-            secs(name)(i) = d; loadAt(name)(i) = ld; stealAt(name)(i) = st
-          }
-        }
-      } else skipped(s"$name@${n}x") = "budget"
-    }
-    // Committed-reference heal + super-linear flag (round 17, uniform
-    // with DedupScale): a leg over 2× bench/stream_scale.json or a >12×
-    // decade re-runs once (min-of-2, load re-journaled at the kept rep);
-    // the flag survives only if it reproduces. Heal spend is bounded by
-    // half the remaining budget headroom plus a 120 s floor, so a lane
-    // that already overshot its budget can still falsify one transient.
-    // Round 18: when the kept rep's own journal says contention, the
-    // heal rep is delayed by a bounded backoff so a short co-tenant
-    // burst can pass instead of landing on both reps.
-    calibs += LaneDiscipline.calibrationRatio(spark, "stream-scale")
-    val (commScales, comm) =
-      LaneDiscipline.committed("bench/stream_scale.json", "stream-scale")
-    val healCap = spent + math.max(120.0, (budgetSecs - spent) * 0.5)
-    val healEvents = Seq.newBuilder[String]
-    for ((name, fn, _) <- picked; i <- scales.indices if spent < healCap) {
-      if (LaneDiscipline.suspect(secs(name), i, scales, commScales, comm.get(name), 12.0)) {
-        val (n, dir) = dirs(i)
-        healEvents += s"$name@${n}x"
-        if (LaneDiscipline.contendedRep(stealAt(name)(i), loadAt(name)(i), laneLoadFloor))
-          LaneDiscipline.backoff("stream-scale")
-        val (d, ld, st) = runLeg(name, fn, n, dir, "heal")
-        if (d < secs(name)(i)) {
-          secs(name)(i) = d; loadAt(name)(i) = ld; stealAt(name)(i) = st
-        }
-      }
-    }
-    // Contended-leg conversion (round 18): a leg still over 2× committed
-    // whose kept rep journaled contention ships as a named non-number.
-    val contended = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((name, _, _) <- picked) {
-      for ((i, reason) <- LaneDiscipline.contendedLegs(secs(name), loadAt(name),
-          stealAt(name), scales, commScales, comm.get(name))) {
-        contended(s"$name@${scales(i)}x") = reason
-        secs(name)(i) = Double.NaN
-      }
-    }
-    val rows = picked.map { case (name, _, _) => LaneEntry(name, secs(name).toSeq) }
-    val superlinear = rows.flatMap(e =>
-      LaneDiscipline.superlinearFlags(e.name, e.times, scales))
-    calibs += LaneDiscipline.calibrationRatio(spark, "stream-scale")
-    val calibration = calibs.result()
-    val calibMax = calibration.filterNot(_.isNaN)
-      .foldLeft(Double.NaN)((a, b) => if (a.isNaN || b > a) b else a)
-    val envSuspect = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    for ((name, _, _) <- picked;
-         (i, reason) <- LaneDiscipline.envSuspectLegs(secs(name), stealAt(name),
-           scales, commScales, comm.get(name), calibMax))
-      envSuspect(s"$name@${scales(i)}x") = reason
-    // distinct: a heal rep re-validates, so a persistently wrong answer
-    // would otherwise report twice (any-rep wrongness still fails)
-    LaneResult(rows, fails.result().distinct, scales, superlinear,
-      picked.map { case (name, _, _) => LaneEntry(name, loadAt(name).toSeq) },
-      healEvents.result(),
-      picked.map { case (name, _, _) => LaneEntry(name, stealAt(name).toSeq) },
-      skipped.toMap, contended.toMap, calibration, envSuspect.toMap)
+    LaneDiscipline.run(spark, LaneDiscipline.Lane("stream", "bench/stream_scale.json",
+      scales, reps, budgetSecs, legs))
   }
 
   /** `--names a,b --scales 1,10,100 --reps N` narrow a standalone run to
-    * specific legs (round-19: targeted quiet re-evidence for suspect legs
-    * without paying for the whole lane). Defaults reproduce the full lane. */
+    * specific legs (targeted quiet re-evidence for suspect legs without
+    * paying for the whole lane). Defaults reproduce the full lane. */
   def main(args: Array[String]): Unit = {
     def argOf(flag: String): Option[String] =
       args.indexOf(flag) match { case -1 => None; case i => args.lift(i + 1) }
@@ -267,27 +142,9 @@ object StreamScale {
     spark.sparkContext.setLogLevel("WARN")
     val r = run(spark, budgetSecs = Double.MaxValue,
       scales = scales, reps = reps, names = names)
-    println("| entry | " + scales.map(n => s"${n}x").mkString(" | ") + " |")
-    println("|---" * (scales.size + 1) + "|")
-    r.entries.foreach { case LaneEntry(n, ts) =>
-      println(s"| $n | " + ts.map(t => f"$t%.2f").mkString(" | ") + " |")
-    }
-    r.loads.foreach { case LaneEntry(n, ls) =>
-      println(s"[stream-scale] $n loads ${ls.map(l => f"$l%.1f").mkString("/")}")
-    }
-    if (r.healed.nonEmpty) println(s"[stream-scale] healed: ${r.healed.mkString(", ")}")
-    println(s"[stream-scale] calibration ratios: " +
-      r.calibration.map(c => if (c.isNaN) "n/a" else f"$c%.2f").mkString("/"))
-    if (r.envSuspect.nonEmpty)
-      println(s"[stream-scale] ENV-SUSPECT (number kept): ${r.envSuspect.mkString(", ")}")
-    if (r.contended.nonEmpty)
-      println(s"[stream-scale] CONTENDED (unmeasured): ${r.contended.mkString(", ")}")
-    if (r.skipped.nonEmpty) println(s"[stream-scale] skipped: ${r.skipped.mkString(", ")}")
-    if (r.superlinear.nonEmpty)
-      println(s"[stream-scale] SUPERLINEAR: ${r.superlinear.mkString(", ")}")
-    val bad = r.validationFailures
-    println(s"validation: ${if (bad.isEmpty) "ALL PASS" else bad.mkString("; ")}")
+    LaneDiscipline.printReport(r)
     spark.stop()
-    require(bad.isEmpty, s"stream scale lane validation failed: ${bad.mkString("; ")}")
+    require(r.validationFailures.isEmpty,
+      s"stream scale lane validation failed: ${r.validationFailures.mkString("; ")}")
   }
 }

@@ -238,4 +238,37 @@ class ScaleLaneSpec extends SparkSpec {
     assert(!tools.LaneDiscipline.suspect(Array(1.0, 2.0, 100.0), 2, scales, Seq(1L, 10L),
       Some(Seq(1.0, 2.0)), 60.0))
   }
+
+  test("LaneDiscipline.run: budget skips, worst-first heals, decade flags, pending legs first") {
+    import tools.LaneDiscipline._
+    // Sleep-timed fake legs against a temp committed reference. "flat"
+    // sleeps 1.1 s at 1x (over 2x its committed 0.5 s -> healed) and
+    // barely at 10x; "steep" sleeps 0.5 s at 1x and 7 s at 10x (a 14x
+    // decade, no committed row -> healed and still flagged).
+    val comm = java.io.File.createTempFile("lane_fake", ".json")
+    comm.deleteOnExit()
+    java.nio.file.Files.write(comm.toPath,
+      """{"scales": [1, 10], "entries": {"flat": [0.5, 20.0]}}""".getBytes("UTF-8"))
+    val sleepMs = Map("flat" -> Map(1L -> 1100L, 10L -> 50L), "steep" -> Map(1L -> 500L, 10L -> 7000L))
+    val ran = scala.collection.mutable.ArrayBuffer.empty[String]
+    def lane(budget: Double) = Lane("spec-fake", comm.getPath, Seq(1L, 10L),
+      Map.empty[Long, Int].withDefaultValue(1), budget,
+      Seq("flat", "steep").map(name => probe(name) { n =>
+        ran += s"$name@${n}x"; Thread.sleep(sleepMs(name)(n)); Nil }))
+    // budget 0: the 1x legs run, every 10x leg is skipped as "budget"
+    val starved = tools.LaneDiscipline.run(spark, lane(0.0))
+    assert(starved.entries.forall(e => !e.times.head.isNaN && e.times(1).isNaN), starved.entries)
+    assert(starved.skipped == Map("flat@10x" -> "budget", "steep@10x" -> "budget"))
+    // the pending ledger names steep@10x, so it runs before flat@10x even
+    // though flat's costlier 1x leg would otherwise put flat first
+    val ledger = new java.io.File("target/spec-fake10_pending")
+    ledger.getParentFile.mkdirs()
+    java.nio.file.Files.write(ledger.toPath, "steep@10x".getBytes("UTF-8"))
+    ran.clear()
+    val r = try tools.LaneDiscipline.run(spark, lane(1e9)) finally ledger.delete()
+    assert(ran.take(4) == Seq("flat@1x", "steep@1x", "steep@10x", "flat@10x"), ran)
+    assert(r.healed.toSet == Set("flat@1x", "steep@10x"), r.healed)
+    assert(r.superlinear == Seq("steep@1x->10x"), r.superlinear)
+    assert(r.skipped.isEmpty && r.contended.isEmpty && r.validationFailures.isEmpty)
+  }
 }

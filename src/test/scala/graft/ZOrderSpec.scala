@@ -9,8 +9,17 @@ import org.apache.spark.sql.functions._
   * written files — the honest stand-in for a file-stats catalog. */
 class ZOrderSpec extends SparkSpec {
 
-  private val zDir = "/root/repo/target/zorder-spec/z"
-  private val aDir = "/root/repo/target/zorder-spec/asort"
+  /** Fresh per-run root for every directory this spec writes, so a rerun
+    * in the same checkout never sees an earlier run's output (the NaN
+    * test asserts its directory does not exist yet). */
+  private lazy val root: String = {
+    val d = java.nio.file.Files.createTempDirectory("zorder-spec").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d.getPath
+  }
+
+  private val zDir = s"$root/z"
+  private val aDir = s"$root/asort"
 
   /** Per-file [min, max] of both dims, normalized to [0, 1] spans. */
   private def fileBoxes(dir: String): Seq[(Double, Double, Double, Double)] = {
@@ -112,7 +121,7 @@ class ZOrderSpec extends SparkSpec {
     // refuses NaN before writing anything (previously the write died
     // mid-flight on bucket16's ANSI cast, leaving partial output).
     import spark.implicits._
-    val dir = "/root/repo/target/zorder-spec/nan"
+    val dir = s"$root/nan"
     val df = Seq((1L, 1.0, 2.0), (2L, 3.0, Double.NaN), (3L, 5.0, 6.0))
       .toDF("k", "x", "y")
     val e = intercept[IllegalArgumentException] {
@@ -142,7 +151,7 @@ class ZOrderSpec extends SparkSpec {
     // A plain read + filter — no caller-side path list. The scan's
     // ZOrderFileIndex translates the pushed band predicate into a
     // manifest query, so the FileSourceScanExec itself plans fewer files.
-    val dir = "/root/repo/target/zorder-spec/fidx"
+    val dir = s"$root/fidx"
     ZOrder.zorderWrite(
       tables.orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
       "o_custkey", "o_totalprice", dir, nFiles = 16)
@@ -189,7 +198,7 @@ class ZOrderSpec extends SparkSpec {
     // numify encodes temporal layout columns as epoch micros, matching
     // the internal form of pushed timestamp literals, so time × id
     // (the natural time-series z-order) prunes like any numeric dim.
-    val dir = "/root/repo/target/zorder-spec/tidx"
+    val dir = s"$root/tidx"
     ZOrder.zorderWrite(
       tables.orders.select(col("o_orderkey"), col("o_orderdate"), col("o_custkey")),
       "o_orderdate", "o_custkey", dir, nFiles = 16)
@@ -217,7 +226,7 @@ class ZOrderSpec extends SparkSpec {
     // 1-ulp-widened box comparisons keep equality/range pruning sound
     // under that rounding. Property-style: every random band over the
     // decimal dimension returns exactly the unpruned answer.
-    val dir = "/root/repo/target/zorder-spec/decidx"
+    val dir = s"$root/decidx"
     val src = tables.orders.select(col("o_orderkey"), col("o_custkey"),
       col("o_totalprice").cast("decimal(12,2)").as("o_price_dec"))
     ZOrder.zorderWrite(src, "o_price_dec", "o_custkey", dir, nFiles = 16)
@@ -249,7 +258,7 @@ class ZOrderSpec extends SparkSpec {
     // (append/compaction), translated predicates must fall back to the
     // full listing — pruning by a manifest that never saw the file would
     // silently drop its rows.
-    val dir = "/root/repo/target/zorder-spec/stale"
+    val dir = s"$root/stale"
     val src = tables.orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     ZOrder.zorderWrite(src.filter(col("o_orderkey") % 2 === 0), "o_custkey", "o_totalprice",
       dir, nFiles = 8)
